@@ -85,10 +85,10 @@ def measure(spark, queries, names, tag: str, trials: int) -> dict:
     return out
 
 
-def main() -> None:
-    import __spark_entry__ as entrymod
-
-    args = [a for a in sys.argv[1:]]
+def parse_args(argv):
+    """argv → (query names, tag, trials). ``--trials`` below 1 is rejected
+    here: measure() needs at least one noop trial for its best time."""
+    args = list(argv)
     tag = "before"
     trials = 3
     if "--tag" in args:
@@ -99,6 +99,16 @@ def main() -> None:
         i = args.index("--trials")
         trials = int(args[i + 1])
         del args[i : i + 2]
+    if trials < 1:
+        raise SystemExit(f"bench_extra.py: --trials must be at least 1, got {trials}")
+    return args, tag, trials
+
+
+def main() -> None:
+    args, tag, trials = parse_args(sys.argv[1:])
+
+    import __spark_entry__ as entrymod
+
     queries = entrymod.queries()
     names = args or [n for n in bench.HEADLINE]
     spark = bench.make_spark(CPUS)

@@ -7,7 +7,10 @@ documented off-spec choices:
 * inverse-context terms sorted shortest-first then lexicographic, first
   wins (compact.rs:97-106, 122-178);
 * the ``@list``/``@none`` patch so empty lists compact onto a list term
-  (comment at compact.rs:180-186);
+  (comment at compact.rs:180-186) — narrowed where it would change a
+  list's meaning: a type-coerced list term is the fallback for empty lists
+  only, and a language list term is not picked for a list holding a plain
+  (untagged) string, which would come back tagged;
 * top-level array wrap/unwrap under ``compact_arrays`` incl. the
   empty-array → ``{}`` rule (compact.rs:243-259);
 * base-relative IRI compaction deliberately unimplemented
@@ -19,7 +22,7 @@ expands its input first.
 
 from __future__ import annotations
 
-from typing import Any, Dict, List, Optional, Tuple
+from typing import Any, Dict, List, Optional, Set, Tuple
 
 from . import errors as E
 from .context import Context, ContextLoader, no_remote_contexts
@@ -33,6 +36,10 @@ class InverseContext:
     def __init__(self, ctx: Context) -> None:
         # {iri: {container: {"type_map": {...}, "language_map": {...}}}}
         self.container_map: Dict[str, Dict[str, Dict[str, Dict[str, str]]]] = {}
+        # {iri: type-coerced list term} and the IRIs whose @list @none entry
+        # is a language term, both from the empty-list patch below
+        self.empty_list_term: Dict[str, str] = {}
+        self.language_patched: Set[str] = set()
         default_language = ctx.language if ctx.language is not None else "@none"
 
         term_order = sorted(ctx.terms.items(), key=lambda kv: (len(kv[0]), kv[0]))
@@ -57,12 +64,15 @@ class InverseContext:
 
             # Off-spec empty-list patch (compact.rs:180-196): IRI compaction
             # of an empty @list falls back to @none, so make sure a term
-            # exists there.
+            # exists there. A type-coerced term is kept out of language_map:
+            # a non-empty list of plain strings also looks up @none there,
+            # and its bare strings would be read back as IRIs or typed values.
             if container == "@list" and "@none" not in language_map:
                 if language_map:
                     language_map["@none"] = next(iter(language_map.values()))
+                    self.language_patched.add(iri)
                 else:
-                    language_map["@none"] = next(iter(type_map.values()))
+                    self.empty_list_term.setdefault(iri, next(iter(type_map.values())))
 
     def select_term(
         self,
@@ -70,6 +80,8 @@ class InverseContext:
         containers: List[str],
         type_language: str,
         preferred_values: List[str],
+        empty_list: bool = False,
+        plain_strings: bool = False,
     ) -> Optional[str]:
         container_map = self.container_map.get(iri)
         if container_map is None:
@@ -79,9 +91,17 @@ class InverseContext:
             if tlm is None:
                 continue
             value_map = tlm["language_map"] if type_language == _LANGUAGE else tlm["type_map"]
+            patched = (
+                plain_strings
+                and container == "@list"
+                and type_language == _LANGUAGE
+                and iri in self.language_patched
+            )
             for item in preferred_values:
-                if item in value_map:
+                if item in value_map and not (patched and item == "@none"):
                     return value_map[item]
+            if empty_list and container == "@list" and iri in self.empty_list_term:
+                return self.empty_list_term[iri]
         return None
 
 
@@ -98,6 +118,8 @@ def _compact_iri(
         containers: List[str] = []
         type_language = _LANGUAGE
         type_language_value = "@null"
+        empty_list = False
+        plain_strings = False
 
         if value is not None and "@index" in value:
             containers.append("@index")
@@ -117,6 +139,15 @@ def _compact_iri(
                 common_language: Optional[str] = None
                 if not lst:
                     common_language = default_language
+                    empty_list = True
+                # checked apart from the loop below, which may stop early
+                plain_strings = any(
+                    isinstance(vitem, dict)
+                    and isinstance(vitem.get("@value"), str)
+                    and vitem.get("@language") is None
+                    and "@type" not in vitem
+                    for vitem in lst
+                )
                 for vitem in lst:
                     if not isinstance(vitem, dict):
                         raise E.CompactionError("list_item_not_object")
@@ -205,7 +236,9 @@ def _compact_iri(
         if not chosen:
             preferred_values += [type_language_value, "@none"]
 
-        term = inverse.select_term(iri, containers, type_language, preferred_values)
+        term = inverse.select_term(
+            iri, containers, type_language, preferred_values, empty_list, plain_strings
+        )
         if term is not None:
             return term
 

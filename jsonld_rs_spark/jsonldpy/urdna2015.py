@@ -215,7 +215,19 @@ class _Canonicalizer:
                 raise E.CanonicalizationError(
                     E.CANON_TOO_COMPLEX, f"{len(blank_nodes)}! permutations"
                 )
+            # a related node reached through several quads (e.g. the blank
+            # graph of every quad a subject has in it) is listed once per
+            # quad; permutations that differ only in how equal labels are
+            # ordered build the same path, so each is tried once, at its
+            # first position in permutation order
+            seen: Optional[set] = None
+            if len(set(blank_nodes)) < len(blank_nodes):
+                seen = set()
             for perm in permutations(blank_nodes):
+                if seen is not None:
+                    if perm in seen:
+                        continue
+                    seen.add(perm)
                 self._spend(len(perm))
                 issuer_copy = issuer.copy()
                 path = ""

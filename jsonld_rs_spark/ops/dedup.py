@@ -49,22 +49,30 @@ def exact_dedup(docs: DataFrame, min_copies: int = 1) -> DataFrame:
 
 
 def _shingles(col="text", k: int = 2):
-    """Word k-shingle array (k=2), expressed with built-in array functions so
-    the whole operator stays JVM-side. ``try_element_at``: under ANSI mode
-    (Spark 4 default) a plain element_at past the end of a <k-word document
-    throws; out-of-range words are skipped by concat_ws instead, so a
-    1-word doc shingles to [word]. ``col`` may be a column name or a Column
-    (ops.text's repetition signals reuse THIS rule so top_2gram_frac stays
-    in lockstep with the corpus-wide shingle definition)."""
-    words = F.split(F.col(col) if isinstance(col, str) else col, " ")
-    n = F.size(words)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.try_element_at(words, (i + j).cast("int")) for j in range(k)]
-        ),
-    )
+    """Word k-shingle array: the text split on " ", each run of k
+    consecutive words joined by " "; a document with fewer than k words
+    (null text counts as "") gives ONE shingle of all its words. Built-in
+    array functions only, so the operator stays JVM-side. ``col`` may be a
+    column name or a Column (ops.text's repetition signals reuse THIS rule
+    so top_2gram_frac stays in lockstep with the corpus-wide shingle
+    definition).
+
+    Linear in the word count: the text is split once and the k shifted
+    ``slice``s of the word array are zipped, so the lambda only joins its
+    own struct's fields. The earlier lambda indexed ``split(text)`` by
+    position, and Spark does no subexpression elimination across a lambda
+    boundary, so every shingle re-split the whole document — O(k·n²) per
+    document. Measured warm on 4 local cores over the 705 corpus_dedup
+    benchmark documents (seed 1): 3.0-3.3 s at k=2 and 6.8-7.3 s at k=5
+    before, 0.37-0.43 s and 0.35-0.38 s now, with identical arrays (pinned
+    by tests/test_ops.py::test_shingles_match_python_windows).
+    A slice starting past the end is empty and arrays_zip pads it with
+    nulls, which concat_ws skips — that is the <k-word rule."""
+    words = F.split(F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit("")), " ")
+    m = F.greatest(F.size(words) - (k - 1), F.lit(1))
+    zipped = F.arrays_zip(*[F.slice(words, j + 1, m) for j in range(k)])
+    # unnamed arrays_zip inputs give struct fields "0".."k-1"
+    return F.transform(zipped, lambda z: F.concat_ws(" ", *[z[str(j)] for j in range(k)]))
 
 
 def _band_hasher(band: int):
@@ -75,10 +83,11 @@ def _band_hasher(band: int):
 
 def shingle_table(docs: DataFrame, k: int = 2) -> DataFrame:
     """(doc_id, sh): the word-k-shingle arrays every shingle-based operator
-    derives from. At 100 TB shingling is the expensive map — operators that
-    need shingles twice (ngram_jaccard_pairs: once for MinHash signatures,
-    once for the exact sets) lazily checkpoint THIS table and read the
-    materialized rows both times instead of re-shingling (VERDICT r2 #4)."""
+    derives from. At 100 TB shingling is the expensive map (linear in the
+    text, see _shingles) — operators that need shingles twice
+    (ngram_jaccard_pairs: once for MinHash signatures, once for the exact
+    sets) lazily checkpoint THIS table and read the materialized rows both
+    times instead of re-shingling (VERDICT r2 #4)."""
     from ..util import spread
 
     return spread(docs.select("doc_id", "text")).select(
@@ -349,7 +358,23 @@ def ngram_jaccard_pairs(
     threshold), and the two array payloads through the verify exchange
     shrink from full 2-word strings to 8-byte longs. The token formula
     (conv(md5[:15], 16, 10)) is chosen because DuckDB computes the identical
-    value via ('0x' || substr(md5(s),1,15))::BIGINT — oracle in lockstep."""
+    value via ('0x' || substr(md5(s),1,15))::BIGINT — oracle in lockstep.
+
+    The verify runs at cluster parallelism: the candidate-pair table is two
+    longs a row, so AQE coalesced its shuffle to ONE partition and every
+    array_intersect ran in a single task. Round-robining the pairs to
+    defaultParallelism before the token joins spreads that work; it is an
+    explicit partition count, so AQE keeps it and no session conf changes.
+    Both token arrays are array_distinct, so |A∪B| = |A| + |B| − |A∩B|
+    exactly and no union array is built. The optimizer pushes the
+    threshold filter into the broadcast join's condition, so that is where
+    the per-pair work runs. Measured warm on 4 local cores over the ~23k
+    candidate pairs of the corpus_dedup benchmark (seed 1): the join took
+    0.88 s in one task and 0.40 s in four, and at four tasks the
+    intersect+union condition took 0.70-0.73 s against 0.48-0.56 s with the
+    arithmetic union. With the linear _shingles, the benchmark's
+    corpus_dedup wall_s went from a 6.41 s to a 3.22 s median over 10
+    interleaved pairs, with identical pairs and scores."""
     shingled_raw = shingle_table(docs).localCheckpoint(eager=False)
     tok = F.array_distinct(
         F.transform(
@@ -358,17 +383,19 @@ def ngram_jaccard_pairs(
         )
     )
     shingled = shingled_raw.select("doc_id", tok.alias("tok"))
-    pairs = minhash_dup_pairs(docs, bands, shingled=shingled_raw)
+    pairs = minhash_dup_pairs(docs, bands, shingled=shingled_raw).repartition(
+        docs.sparkSession.sparkContext.defaultParallelism
+    )
     j = (
         pairs.join(shingled.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("tok", "tok_a"), "doc_a")
         .join(shingled.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("tok", "tok_b"), "doc_b")
     )
-    inter = F.size(F.array_intersect("tok_a", "tok_b")).cast("double")
-    union = F.size(F.array_union("tok_a", "tok_b")).cast("double")
+    inter = F.size(F.array_intersect("tok_a", "tok_b"))
+    union = F.size("tok_a") + F.size("tok_b") - inter
     # threshold on the RAW ratio (rounding only for display) — the oracle
     # filters raw too; filtering the rounded value would flip boundary pairs
     return (
-        j.withColumn("__raw", inter / union)
+        j.withColumn("__raw", inter.cast("double") / union.cast("double"))
         .filter(F.col("__raw") >= threshold)
         .select("doc_a", "doc_b", F.round("__raw", 6).alias("jaccard"))
     )

@@ -46,9 +46,15 @@ def detect_mentions(pages_df, surface_forms: List[str] = None):
     per-form counting, else one ``regexp_count`` per form fused into one
     projection. Both replaced the earlier mapInPandas Python-regex pass
     (Arrow boundary + per-batch pandas loops for work codegen does
-    natively). Semantics unchanged: ``\\b`` is ASCII-equivalent in Java and
-    Python ``re`` for all-ASCII surface forms over this corpus, and both
-    tiers are A/B-pinned against the Python-regex twin below by
+    natively). Both JVM patterns carry ``(?U)``, because Python ``re``'s
+    ``\\b`` is Unicode-aware and Java's is not by default: its ``\\w`` is
+    ASCII, its ``\\b`` is ASCII from JDK 19 on ("dataé" would count), and
+    JDK 17's ``\\b`` misses letter numbers ("dataⅫ" counted). With it both
+    engines agree on letters, digits and ``_`` of any script. They still
+    differ on combining and spacing marks, non-``_`` connector punctuation
+    and zero-width joiners (word characters to Java only) and on numeric
+    symbols like "²" (to Python only). Both tiers are A/B-pinned against
+    the Python-regex twin below by
     tests/test_ops.py::test_detect_mentions_matches_python_regex."""
     from pyspark.sql import functions as F
 
@@ -70,7 +76,7 @@ def detect_mentions(pages_df, surface_forms: List[str] = None):
         a != b and a in b for a in forms for b in forms
     )
     if single_scan_safe:
-        pat = r"\b(" + "|".join(forms) + r")\b"
+        pat = r"(?U)\b(" + "|".join(forms) + r")\b"
         return (
             src.select(
                 "url",
@@ -84,7 +90,7 @@ def detect_mentions(pages_df, surface_forms: List[str] = None):
     structs = [
         F.struct(
             F.lit(f).alias("surface_form"),
-            F.regexp_count(text, F.lit(rf"\b{re.escape(f)}\b"))
+            F.regexp_count(text, F.lit(rf"(?U)\b{re.escape(f)}\b"))
             .cast("int")
             .alias("tf"),
         )

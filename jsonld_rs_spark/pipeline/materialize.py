@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from typing import Dict, Optional
@@ -121,14 +122,28 @@ def write_manifest(spark: SparkSession, out_dir: str, stage: str, run_id: str, s
     directory in ~10 ms, and ``read_manifest``'s ``spark.read.parquet``
     reads a mixed Spark/pyarrow directory transparently (schema
     identical). The driver is not doing data work here (guide §5) — it is
-    stamping its own run record."""
+    stamping its own run record.
+
+    A scheme-qualified ``out_dir`` (``file://``, ``hdfs://``, ``s3a://``)
+    is written through ``pyarrow.fs.FileSystem.from_uri``; Hadoop's
+    ``s3a``/``s3n`` name the bucket pyarrow reaches as ``s3``. Plain paths
+    keep the local write."""
     import uuid as _uuid
+    from urllib.parse import urlparse
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     path = _manifest_path(out_dir)
-    os.makedirs(path, exist_ok=True)
+    fs = None
+    # one-letter schemes are Windows drive letters, not URIs
+    if len(urlparse(out_dir).scheme) > 1:
+        import pyarrow.fs as pafs
+
+        fs, path = pafs.FileSystem.from_uri(re.sub(r"^s3[an]://", "s3://", path))
+        fs.create_dir(path, recursive=True)
+    else:
+        os.makedirs(path, exist_ok=True)
     table = pa.table(
         {
             "stage": pa.array([stage], pa.string()),
@@ -139,7 +154,7 @@ def write_manifest(spark: SparkSession, out_dir: str, stage: str, run_id: str, s
         }
     )
     pq.write_table(
-        table, os.path.join(path, f"part-{_uuid.uuid4().hex}.snappy.parquet")
+        table, f"{path}/part-{_uuid.uuid4().hex}.snappy.parquet", filesystem=fs
     )
 
 

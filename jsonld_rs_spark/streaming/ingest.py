@@ -163,17 +163,19 @@ def streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = "stream_winev_" + uuid.uuid4().hex[:12]
     old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_stream_agg_partitions(spark))
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
+        # set and start INSIDE the try: a failing .start() must still
+        # restore the session's shuffle partitions in the finally
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(_stream_agg_partitions(spark))
+        )
+        q = (
+            agg.writeStream.outputMode("complete")
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
         # availableNow complete-mode aggregations self-terminate when input
         # is exhausted, but a stalled one must fail loudly, not hang the
         # driver gate forever (ADVICE r3) — awaitTermination(N) returns
@@ -239,18 +241,19 @@ def streaming_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = "stream_rollup_" + uuid.uuid4().hex[:12]
     old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_stream_agg_partitions(spark))
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        # see streaming_window_counts: loud timeout instead of a silent hang
+        # see streaming_window_counts: set and start inside the try, loud
+        # timeout instead of a silent hang
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(_stream_agg_partitions(spark))
+        )
+        q = (
+            agg.writeStream.outputMode("complete")
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
         if not q.awaitTermination(STREAM_TIMEOUT_SEC):
             q.stop()
             spark.catalog.dropTempView(name)

@@ -110,3 +110,15 @@ def test_probe_quiet_threshold_tracks_measured_quiet_table():
     assert _speedup_quiet_threshold(16) == pytest.approx(6.4)
     # the 1-thread noise gate is unchanged
     assert not _probe_quiet({"noise_sec": 2.5, "speedup": 25.8}, 32)
+
+
+@pytest.mark.parametrize("trials", ["0", "-1"])
+def test_bench_extra_rejects_trials_below_one(trials):
+    """bench_extra.py --trials 0 used to run the collect trial and then
+    crash on round(None); it is now refused while parsing arguments."""
+    import bench_extra
+
+    with pytest.raises(SystemExit, match="--trials must be at least 1"):
+        bench_extra.parse_args(["kg_components", "--trials", trials])
+    assert bench_extra.parse_args(["kg_components", "--trials", "2"]) == (
+        ["kg_components"], "before", 2)

@@ -10,10 +10,12 @@ _compact_iri candidate ranking get exercised across contexts, not just
 inputs. Contexts that fail context processing and documents that fail
 expansion raise typed errors and are out of the property's scope; for
 everything else the canonical N-Quads of ``expand(compact(doc))`` must
-equal those of ``expand(doc)`` exactly.
+equal those of ``expand(doc)`` exactly, and a document that RDF conversion
+rejects with a node-map error (one node under two ``@index`` values) must be
+rejected with the same error code after the round trip.
 """
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from jsonld_rs_spark.jsonldpy import (
@@ -88,6 +90,35 @@ def _node(depth: int):
 
 
 @given(ctx=_CONTEXT, doc=_node(2))
+# a plain-string list must not compact onto an earlier, @id-coerced list
+# term for the same IRI (the empty-list patch once made it the @none pick)
+@example(
+    ctx={
+        "@vocab": "http://v.example/",
+        "pt": "http://p.example/v#t",
+        "t3": {"@id": "http://e/p", "@container": "@list"},
+        "t2": {"@id": "http://e/p", "@type": "@id", "@container": "@list"},
+    },
+    doc={"t3": "", "@id": "http://e/a"},
+)
+# ... nor onto a language-tagged list term, which would tag the string
+@example(
+    ctx={"t3": {"@id": "http://e/p", "@container": "@list", "@language": "en"}},
+    doc={"t3": {"@value": ""}, "@id": "http://e/a"},
+)
+# one node under two @index values: RDF conversion rejects the document,
+# and must reject its round trip the same way
+@example(
+    ctx={
+        "t2": {
+            "@id": "http://e/p",
+            "@type": "@id",
+            "@language": "en",
+            "@container": "@index",
+        }
+    },
+    doc={"t2": {"t1": "", "t2": "", "@id": "http://e/a"}, "@id": "http://e/a"},
+)
 @settings(
     max_examples=500,
     deadline=None,
@@ -103,7 +134,11 @@ def test_expand_compact_expand_under_random_contexts(ctx, doc):
         return
 
     def nq(ex):
-        return canonical_nquads(jsonld_to_rdf(ex, DefaultNodeGenerator()))
+        try:
+            dataset = jsonld_to_rdf(ex, DefaultNodeGenerator())
+        except E.NodeMapError as err:
+            return "node map error: " + err.code
+        return canonical_nquads(dataset)
 
     try:
         compacted = compact_document(src, {"@context": ctx}, base=base)

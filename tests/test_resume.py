@@ -9,6 +9,7 @@ from jsonld_rs_spark.pipeline.materialize import (
     extract_and_materialize,
     read_manifest,
     read_triples,
+    write_manifest,
 )
 from jsonld_rs_spark.pipeline.synth import latest_pages, synthesize_pages
 
@@ -422,3 +423,18 @@ def test_legacy_records_without_run_ts_stay_healed(spark, tmp_path_factory):
     q2 = {(r["url"], r["block_index"])
           for r in quarantined(_read_records(spark, f"{out}/records")).collect()}
     assert (url, 1) in q2 and ("http://pg.example/legacy2", 1) in q2
+
+
+def test_manifest_on_file_uri(spark, tmp_path, monkeypatch):
+    """A scheme-qualified out_dir goes through pyarrow's URI filesystem:
+    the row lands under the URI's path (not a relative 'file:' directory)
+    and read_manifest reads it back."""
+    monkeypatch.chdir(tmp_path)
+    out_dir = (tmp_path / "sink").as_uri()
+    assert out_dir.startswith("file://")
+    write_manifest(spark, out_dir, "extract", "run-uri", "done", {"n": 1})
+    assert not (tmp_path / "file:").exists()
+    rows = read_manifest(spark, out_dir).collect()
+    assert [(r["stage"], r["run_id"], r["status"], r["extra"]) for r in rows] == [
+        ("extract", "run-uri", "done", '{"n": 1}')
+    ]

@@ -138,3 +138,27 @@ def test_streaming_event_rollup_matches_batch(spark, sf_dir):
         for r in batch.collect()
     }
     assert got == want and len(got) > 0
+
+
+@pytest.mark.parametrize("replay", ["streaming_event_rollup", "streaming_window_counts"])
+def test_replay_restores_shuffle_partitions_when_start_fails(spark, sf_dir, monkeypatch, replay):
+    """The replays override spark.sql.shuffle.partitions for their state
+    shards; a stream that fails to start must leave the session's value
+    as it found it."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from jsonld_rs_spark.streaming import ingest
+
+    def fail_start(self, *args, **kwargs):
+        raise RuntimeError("stream failed to start")
+
+    monkeypatch.setattr(DataStreamWriter, "start", fail_start)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    # a value the replay's own shard count (8 here) cannot coincide with
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    try:
+        with pytest.raises(RuntimeError, match="failed to start"):
+            getattr(ingest, replay)(spark, sf_dir)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
