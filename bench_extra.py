@@ -5,7 +5,7 @@ NOT the driver bench (bench.py is frozen). This file:
     computation is measured without the py4j collect the driver bench pays;
   * also records the collect wall (the driver-comparable number);
   * dumps .explain("formatted") for every measured query into
-    plans/r08/<query>_<tag>.txt  (tag = argv[2], default "before");
+    plans/<tag>/<query>.txt  (tag = --tag, default "before");
   * labels jobs (spark.sparkContext.setJobDescription) per guide §1.5.
 
 Usage:
@@ -29,15 +29,16 @@ import bench  # noqa: E402  (frozen driver harness — reused, never edited)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-PLANS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r08")
+PLANS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans")
 
 
 def _dump_plan(df, name: str, tag: str) -> None:
-    os.makedirs(PLANS_DIR, exist_ok=True)
+    out_dir = os.path.join(PLANS_DIR, tag)
+    os.makedirs(out_dir, exist_ok=True)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
-    with open(os.path.join(PLANS_DIR, f"{name}_{tag}.txt"), "w") as f:
+    with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
         f.write(buf.getvalue())
 
 

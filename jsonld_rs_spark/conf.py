@@ -13,11 +13,33 @@ tests, and ad-hoc sessions cannot drift:
 * AQE on (skew joins, runtime coalescing for the relational stages);
 * shuffle partitions scaled to 2× cores — the Python-heavy stages manage
   their own parallelism via util.spread / explicit repartition.
+
+``scoped_conf`` is the one way code overrides a session setting for a single
+query (the streaming state-shard counts): the override is undone on exit,
+also when the query fails to start.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+from typing import Any, Dict
+
+
+@contextlib.contextmanager
+def scoped_conf(spark, settings: Dict[str, Any]):
+    """Set ``settings`` on ``spark.conf`` for the ``with`` body, then put
+    back each key's previous value, whether the body returns or raises. A
+    streaming query keeps the values it was started under: ``start()``
+    clones the session's conf."""
+    saved = {key: spark.conf.get(key) for key in settings}
+    try:
+        for key, value in settings.items():
+            spark.conf.set(key, str(value))
+        yield
+    finally:
+        for key, value in saved.items():
+            spark.conf.set(key, value)
 
 
 def session_builder(master: str = None, app_name: str = "jsonld-rs-spark"):

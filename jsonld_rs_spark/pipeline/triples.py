@@ -173,12 +173,18 @@ def extract_records(pages_df, store: Optional[Dict[str, Any]] = None, stage: str
     """pages → combined (triples + per-batch metrics) records DataFrame.
 
     Reads only (url, html) — column pruning reaches the parquet/page scan.
-    The context store is broadcast once per job.
+    The context store is broadcast once per call.
     """
-    import pandas as pd
-
     spark = pages_df.sparkSession
     store_b = spark.sparkContext.broadcast(store or BUILTIN_CONTEXTS)
+    return _extract_records(pages_df, store_b, stage)
+
+
+def _extract_records(pages_df, store_b, stage: str):
+    """``extract_records`` over an already broadcast context store. A
+    stream reuses one broadcast for all its micro-batches: a broadcast per
+    call keeps one more temp file per batch alive on the driver."""
+    import pandas as pd
 
     # Column pruning: only (url, html) reach the scan. Partitioning is
     # inherited from the input (synthesize_pages spreads the scan to cluster

@@ -10,9 +10,19 @@ dedup.
 Design choices for scale:
 * ``foreachBatch`` drives the SAME batch extraction stage (triples.py) —
   one code path to test, and each micro-batch inherits the batch stage's
-  partition/broadcast behavior;
+  partition behavior;
 * dedup state is bounded by a watermark on ``warc_ts`` (without it, a
   10^12-row stream accumulates unbounded state);
+* the dedup state store has at most one shard per core: its shard count is
+  ``min(spark.sql.shuffle.partitions, defaultParallelism)``, fixed when the
+  query starts. The ``foreachBatch`` extraction runs in those same
+  partitions, and each Python task pays a fixed start-up cost (~0.25 s on a
+  4-core box) before its body runs, so a micro-batch's Python stage must fit
+  in one wave. At the session's 2×cores a 6-page drop ran 8 tasks in two
+  waves: perfbench stream_ingest freshness p50 was 1.40 s at 8 shards and
+  0.87 s at 4 (medians of 10 interleaved runs, local[4]). Checkpointed
+  queries keep the shard count of their batch 0;
+* the context store is broadcast once per query, not once per micro-batch;
 * foreachBatch alone is only at-least-once; each batch writes to its own
   ``batch=<id>`` directory with overwrite, so a replayed batch replaces its
   previous attempt — idempotent, hence exactly-once end-to-end with the
@@ -27,7 +37,9 @@ from typing import Any, Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline.triples import extract_records
+from ..conf import scoped_conf
+from ..pipeline.context_store import BUILTIN_CONTEXTS
+from ..pipeline.triples import _extract_records
 
 # Loud-failure timeout for availableNow streaming queries (ADVICE r3: never
 # hang the driver gate; ADVICE r4: the constant must be widenable on this
@@ -46,15 +58,8 @@ def _stream_agg_partitions(spark) -> int:
     triples the replay wall for zero distribution benefit (measured at
     sf0.1/local[32]: rollup 3.1-5.5 s warm at 64 shards vs 1.2-1.5 s at 8;
     identical results — partitioning only distributes keys). Scales with
-    the cluster (cores/4, floor 8) rather than a constant; raise via
-    $SPARK_GRAFT_STREAM_AGG_PARTITIONS when the key space actually needs
-    more shards."""
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_STREAM_AGG_PARTITIONS",
-            max(8, spark.sparkContext.defaultParallelism // 4),
-        )
-    )
+    the cluster (cores/4, floor 8) rather than a constant."""
+    return max(8, spark.sparkContext.defaultParallelism // 4)
 
 
 def stream_pages(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -93,9 +98,11 @@ def start_streaming_extraction(
     """
     records_path = os.path.join(out_dir, "records")
     checkpoint = os.path.join(out_dir, "_stream_checkpoint")
+    spark = pages_stream.sparkSession
+    store_b = spark.sparkContext.broadcast(store or BUILTIN_CONTEXTS)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        records = extract_records(batch_df, store=store, stage=f"stream_b{batch_id}")
+        records = _extract_records(batch_df, store_b, stage=f"stream_b{batch_id}")
         # overwrite of a per-batch directory makes retries idempotent
         # (plain append would duplicate a replayed batch)
         records.write.mode("overwrite").parquet(
@@ -112,7 +119,13 @@ def start_streaming_extraction(
     )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    # one state shard, hence one foreachBatch Python task, per core at most
+    shards = min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": shards}):
+        return writer.start()
 
 
 def windowed_page_counts(pages_stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -162,20 +175,17 @@ def streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "stream_winev_" + uuid.uuid4().hex[:12]
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        # set and start INSIDE the try: a failing .start() must still
-        # restore the session's shuffle partitions in the finally
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(_stream_agg_partitions(spark))
-        )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
+        with scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": _stream_agg_partitions(spark)}
+        ):
+            q = (
+                agg.writeStream.outputMode("complete")
+                .format("memory")
+                .queryName(name)
+                .trigger(availableNow=True)
+                .start()
+            )
         # availableNow complete-mode aggregations self-terminate when input
         # is exhausted, but a stalled one must fail loudly, not hang the
         # driver gate forever (ADVICE r3) — awaitTermination(N) returns
@@ -192,7 +202,6 @@ def streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         import shutil
 
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
         shutil.rmtree(stage_dir, ignore_errors=True)
     result = spark.table(name).localCheckpoint()
     spark.catalog.dropTempView(name)
@@ -240,20 +249,18 @@ def streaming_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "stream_rollup_" + uuid.uuid4().hex[:12]
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        # see streaming_window_counts: set and start inside the try, loud
-        # timeout instead of a silent hang
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(_stream_agg_partitions(spark))
-        )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
+        # see streaming_window_counts: loud timeout instead of a silent hang
+        with scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": _stream_agg_partitions(spark)}
+        ):
+            q = (
+                agg.writeStream.outputMode("complete")
+                .format("memory")
+                .queryName(name)
+                .trigger(availableNow=True)
+                .start()
+            )
         if not q.awaitTermination(STREAM_TIMEOUT_SEC):
             q.stop()
             spark.catalog.dropTempView(name)
@@ -264,7 +271,6 @@ def streaming_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the returned frame reads the in-memory sink, not the staged files
         import shutil
 
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
         shutil.rmtree(stage_dir, ignore_errors=True)
     # copy the sink's rows (localCheckpoint materializes them), then drop the
     # uuid-named memory-sink table — repeated invocations in one session

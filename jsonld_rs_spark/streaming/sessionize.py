@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..conf import scoped_conf
+
 SESSION_SCHEMA = (
     "user_id long, session_start timestamp, session_end timestamp, n_events int"
 )
@@ -218,41 +220,37 @@ def sessionize_replay(
     max(n_stage_files, cores/2) — scale-adaptive, derived from the cluster
     rather than a constant, so a bigger input on a bigger cluster gets more
     shards while the local replay stops paying 64 shards of per-batch fixed
-    cost for 1 500 users. Overridable via
-    $SPARK_GRAFT_SESSION_STATE_PARTITIONS."""
-    import os as _os
+    cost for 1 500 users."""
     import shutil
     import tempfile
     import uuid
 
     if n_state_partitions is None:
-        n_state_partitions = int(
-            _os.environ.get(
-                "SPARK_GRAFT_SESSION_STATE_PARTITIONS",
-                max(n_stage_files, spark.sparkContext.defaultParallelism // 2),
-            )
+        n_state_partitions = max(
+            n_stage_files, spark.sparkContext.defaultParallelism // 2
         )
     stage = tempfile.mkdtemp(prefix="sess_replay_in_")
     ckpt = tempfile.mkdtemp(prefix="sess_replay_ck_")
     name = "sessions_" + uuid.uuid4().hex[:12]
-    old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        # scoped to this replay; restored below. Only the value at batch 0
-        # matters for the state layout, but the whole query runs under it.
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_state_partitions))
         events_df.select("user_id", "ts").repartition(
             n_stage_files, "user_id"
         ).write.mode("overwrite").parquet(stage)
         stream = spark.readStream.schema("user_id long, ts timestamp").parquet(stage)
-        q = (
-            sessionize(stream, gap_us)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        # the query keeps the shard count it starts under (start() clones
+        # the session conf); the session gets its own value back at once
+        with scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": n_state_partitions}
+        ):
+            q = (
+                sessionize(stream, gap_us)
+                .writeStream.format("memory")
+                .queryName(name)
+                .outputMode("append")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
         await_drained(q)
         # materialize both sides BEFORE the staging dirs are removed (the
         # flush side reads state files under ckpt) and drop the sink table
@@ -260,7 +258,6 @@ def sessionize_replay(
         spark.catalog.dropTempView(name)
         flushed = flush_open_sessions(spark, ckpt).localCheckpoint()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
         shutil.rmtree(stage, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
     return emitted.unionByName(flushed)

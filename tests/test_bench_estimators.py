@@ -122,3 +122,13 @@ def test_bench_extra_rejects_trials_below_one(trials):
         bench_extra.parse_args(["kg_components", "--trials", trials])
     assert bench_extra.parse_args(["kg_components", "--trials", "2"]) == (
         ["kg_components"], "before", 2)
+
+
+def test_bench_extra_dumps_plans_under_their_tag(spark, tmp_path, monkeypatch):
+    """Plan dumps land in plans/<tag>/<query>.txt, not a fixed round dir."""
+    import bench_extra
+
+    monkeypatch.setattr(bench_extra, "PLANS_DIR", str(tmp_path))
+    bench_extra._dump_plan(spark.range(3), "kg_components", "after")
+    with open(tmp_path / "after" / "kg_components.txt") as f:
+        assert "Range" in f.read()

@@ -115,6 +115,47 @@ def test_dedup_late_crawls_drops_duplicate_arrivals(spark, pages, tmp_path_facto
     assert spark.sql("select count(*) c from dedup_out").collect()[0]["c"] == 20
 
 
+def test_streaming_dedup_extracts_each_page_once(spark, pages, tmp_path_factory):
+    """The stateful (url, warc_ts) dedup in front of extraction: a page
+    written twice yields its triples once, and the dedup state has at most
+    one shard per core (the session's 8 would run the micro-batch's Python
+    stage in two waves on local[4])."""
+    from collections import Counter
+
+    in_dir = str(tmp_path_factory.mktemp("stream_in5"))
+    out_dir = str(tmp_path_factory.mktemp("stream_out5"))
+    some = pages.limit(20).localCheckpoint()
+    some.write.mode("append").parquet(in_dir)
+    some.write.mode("append").parquet(in_dir)  # same (url, warc_ts) again
+
+    q = start_streaming_extraction(
+        stream_pages(spark, in_dir), out_dir, dedup_watermark="3650 days"
+    )
+    q.awaitTermination(120)
+
+    want = Counter(tuple(r) for r in split_records(extract_records(some))[0].collect())
+    got = Counter(tuple(r) for r in _triples_at(spark, out_dir).collect())
+    assert got == want and len(want) > 0
+    shards = [p.stateOperators[0].numShufflePartitions for p in q.recentProgress]
+    assert shards and max(shards) <= spark.sparkContext.defaultParallelism
+
+
+def test_streaming_extraction_broadcasts_store_once(spark, pages, tmp_path_factory):
+    """One context-store broadcast per query, not per micro-batch: every
+    broadcast keeps a temp file on the driver for the session's lifetime."""
+    in_dir = str(tmp_path_factory.mktemp("stream_in6"))
+    out_dir = str(tmp_path_factory.mktemp("stream_out6"))
+    # 12 files at stream_pages' 4 files per trigger: 3 micro-batches
+    pages.limit(24).repartition(12).write.mode("append").parquet(in_dir)
+
+    temp_dir = spark.sparkContext._temp_dir
+    before = set(os.listdir(temp_dir))
+    q = start_streaming_extraction(stream_pages(spark, in_dir), out_dir)
+    q.awaitTermination(120)
+    assert len(q.recentProgress) >= 3
+    assert len(set(os.listdir(temp_dir)) - before) <= 1
+
+
 def test_streaming_event_rollup_matches_batch(spark, sf_dir):
     """The streaming replay (availableNow, complete mode) must produce the
     exact batch aggregate."""
@@ -140,25 +181,51 @@ def test_streaming_event_rollup_matches_batch(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-@pytest.mark.parametrize("replay", ["streaming_event_rollup", "streaming_window_counts"])
-def test_replay_restores_shuffle_partitions_when_start_fails(spark, sf_dir, monkeypatch, replay):
-    """The replays override spark.sql.shuffle.partitions for their state
-    shards; a stream that fails to start must leave the session's value
-    as it found it."""
+@pytest.mark.parametrize(
+    "replay",
+    [
+        "streaming_event_rollup",
+        "streaming_window_counts",
+        "sessionize_replay",
+        "start_streaming_extraction",
+    ],
+)
+def test_replay_restores_shuffle_partitions_when_start_fails(
+    spark, sf_dir, monkeypatch, tmp_path, replay
+):
+    """Every stream started under scoped_conf overrides
+    spark.sql.shuffle.partitions for its state shards; a stream that fails
+    to start must leave the session's value as it found it."""
     from pyspark.sql.streaming.readwriter import DataStreamWriter
 
-    from jsonld_rs_spark.streaming import ingest
+    from jsonld_rs_spark.streaming import ingest, sessionize
 
     def fail_start(self, *args, **kwargs):
         raise RuntimeError("stream failed to start")
 
+    def run():
+        if replay == "sessionize_replay":
+            events = spark.read.parquet(f"{sf_dir}/events.parquet")
+            sessionize.sessionize_replay(spark, events)
+        elif replay == "start_streaming_extraction":
+            in_dir = tmp_path / "in"
+            in_dir.mkdir()
+            ingest.start_streaming_extraction(
+                ingest.stream_pages(spark, str(in_dir)),
+                str(tmp_path / "out"),
+                dedup_watermark="1 hour",
+            )
+        else:
+            getattr(ingest, replay)(spark, sf_dir)
+
     monkeypatch.setattr(DataStreamWriter, "start", fail_start)
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    # a value the replay's own shard count (8 here) cannot coincide with
+    # a value no stream's own shard count (8, 8 and min(5, 4) here) can
+    # coincide with
     spark.conf.set("spark.sql.shuffle.partitions", "5")
     try:
         with pytest.raises(RuntimeError, match="failed to start"):
-            getattr(ingest, replay)(spark, sf_dir)
+            run()
         assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
