@@ -19,25 +19,27 @@ deterministic, partition-independent.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..util import local_frame
 
 # min() skew is already handled by map-side partial aggregation; see
 # _min_neighbor for when a salted two-phase aggregation actually pays.
 SALT_BUCKETS = 1
 
-# Small-graph fast path (r8): below this many distinct edges the label set
-# is computed with a driver-side union-find instead of star rounds. Each
-# star round costs ~5 exchanges + a signature job of FIXED scheduling
-# overhead (~1.5-2 s for a 33-edge graph at local[32]) that dwarfs the data;
-# a bounded collect (≤ 64 Ki edges ≈ a few MB — same class as the ≤4096-row
-# IVF codebook collect, similarity.py) computes the identical min-id
-# labeling in milliseconds. The threshold is data-size-derived, not
-# cluster-derived: above it the Kiveris large-star/small-star path runs
-# unchanged, which is the only shape that survives 100 TB.
-SMALL_GRAPH_EDGES = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "65536"))
+# Small-graph fast path (r8): at or below this many distinct (src, dst)
+# input rows the label set is computed with a driver-side union-find
+# instead of star rounds. Each star round costs ~5 exchanges + a signature
+# job of FIXED scheduling overhead (~1.5-2 s for a 33-edge graph at
+# local[32]) that dwarfs the data; a bounded collect (≤ 64 Ki edges ≈ a
+# few MB — same class as the ≤4096-row IVF codebook collect,
+# similarity.py) computes the identical min-id labeling in milliseconds.
+# The threshold is data-size-derived, not cluster-derived: above it the
+# Kiveris large-star/small-star path runs unchanged, which is the only
+# shape that survives 100 TB.
+SMALL_GRAPH_EDGES = 65536
 
 
 def _min_neighbor(edges: DataFrame, salt_buckets: int) -> DataFrame:
@@ -122,6 +124,66 @@ def _signature(edges: DataFrame):
 LAST_STATS: dict = {}
 
 
+def _driver_labels(base: DataFrame, stats: dict = None) -> DataFrame:
+    """(node, component) for every node of the distinct (src, dst) rows in
+    ``base``, by a driver union-find over one collect.
+
+    Every node gets its label here, so no ``all_nodes ⨝ labels`` join runs:
+    a node seen only in a self-loop or next to a null endpoint labels
+    itself, and a null endpoint yields the one ``(null, null)`` row the
+    star path's left join emits. The table is returned broadcast-hinted:
+    it is at most SMALL_GRAPH_EDGES·2 rows built on the driver, so every
+    consumer (``canonicalize_subjects``, ``dup_clusters``) joins it without
+    shuffling its own side."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    has_null = False
+    n_edges = 0
+    for src, dst in base.collect():
+        for x in (src, dst):
+            if x is not None:
+                parent.setdefault(x, x)
+        if src is None or dst is None:
+            has_null = True
+        elif src != dst:
+            n_edges += 1
+            ra, rb = find(src), find(dst)
+            if ra != rb:
+                # union by MIN root: the surviving root is the smaller id,
+                # so every tree root IS its component's min node id
+                lo, hi = (ra, rb) if ra < rb else (rb, ra)
+                parent[hi] = lo
+    nodes = list(parent)
+    components = [find(n) for n in nodes]
+    if has_null:
+        nodes.append(None)
+        components.append(None)
+    node_type = base.schema["src"].dataType
+    labels = local_frame(
+        base.sparkSession,
+        {"node": nodes, "component": components},
+        StructType(
+            [
+                StructField("node", node_type, True),
+                StructField("component", node_type, True),
+            ]
+        ),
+    )
+    LAST_STATS.clear()
+    LAST_STATS.update({"rounds": 0, "jobs": 0, "local_edges": n_edges})
+    if stats is not None:
+        stats.update(LAST_STATS)
+    return F.broadcast(labels)
+
+
 def connected_components(
     edges_df: DataFrame,
     max_iter: int = 30,
@@ -134,7 +196,10 @@ def connected_components(
     Deterministic: component id = lexicographic min node id. Self-loops and
     duplicate/reversed edges are tolerated. Pass ``stats={}`` to receive
     {'rounds': N, 'jobs': M} — large-star/small-star converges in O(log n)
-    rounds.
+    rounds. Graphs of at most SMALL_GRAPH_EDGES distinct input rows skip
+    the rounds ({'rounds': 0, 'jobs': 0, 'local_edges': E}, E = distinct
+    non-self-loop edges) and come back as a broadcast-hinted driver-built
+    table (``_driver_labels``).
 
     ``check_every``: convergence signatures run every this many rounds
     instead of every round. Sparse checking pays only when per-job
@@ -152,76 +217,23 @@ def connected_components(
     """
     if check_every < 1:
         raise ValueError(f"check_every must be >= 1, got {check_every}")
-    # Materialize the INPUT plan once (r8, guide §2.4): edges and all_nodes
-    # both consume edges_df, and the two eager localCheckpoints here used to
-    # run the full upstream plan twice — for corpus_filter that upstream is
-    # the whole MinHash+Jaccard-verify chain (~6 s recomputed at sf0.1 for a
-    # 33-edge graph). One lazy checkpoint of the narrow (src, dst)
-    # projection feeds both derivations; everything materializes inside the
-    # first action that needs it (the round-1 convergence signature), and
-    # all_nodes reuses the materialized base when the final label join runs.
-    base = edges_df.select("src", "dst").localCheckpoint(eager=False)
-    edges = (
-        base.filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    all_nodes = (
-        base.select(F.col("src").alias("node"))
-        .unionByName(base.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    # Materialize the INPUT plan once (r8, guide §2.4): for corpus_filter
+    # the upstream is the whole MinHash+Jaccard-verify chain, which no
+    # consumer below may re-run. One lazy checkpoint of the distinct
+    # (src, dst) rows feeds everything; the gating count materializes it,
+    # and both paths derive their edge and node sets from it.
+    base = edges_df.select("src", "dst").distinct().localCheckpoint(eager=False)
 
-    # Small-graph fast path (r8): one count over the just-checkpointed edge
-    # set gates it (that job materializes the checkpoints round 1 needed
-    # anyway, so the big-graph path pays only a cached-count). Below the
-    # bound, a driver union-find produces the IDENTICAL labeling — the
-    # distributed algorithm's contract is component = min node id, which is
-    # exactly what union-by-min computes — in one job instead of
+    # Small-graph fast path (r8): at or below the bound a driver union-find
+    # produces the IDENTICAL labeling — the distributed algorithm's contract
+    # is component = min node id, which is exactly what union-by-min
+    # computes — from one collect of the checkpoint instead of
     # O(log n) × (5 exchanges + signature job) rounds. Equivalence is
     # pinned by tests (fast path vs forced star path on random graphs).
-    n_edges = edges.count()
-    if n_edges <= SMALL_GRAPH_EDGES:
-        from pyspark.sql.types import StructField, StructType
+    if base.count() <= SMALL_GRAPH_EDGES:
+        return _driver_labels(base, stats)
 
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        for row in edges.collect():
-            ra, rb = find(row[0]), find(row[1])
-            if ra != rb:
-                # union by MIN root: the surviving root is the smaller id,
-                # so every tree root IS its component's min node id
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        label_rows = [(n, find(n)) for n in list(parent)]
-        node_type = edges.schema[0].dataType
-        labels = edges.sparkSession.createDataFrame(
-            label_rows,
-            StructType(
-                [
-                    StructField("node", node_type, True),
-                    StructField("component", node_type, True),
-                ]
-            ),
-        )
-        LAST_STATS.clear()
-        LAST_STATS.update({"rounds": 0, "jobs": 0, "local_edges": n_edges})
-        if stats is not None:
-            stats.update({"rounds": 0, "jobs": 0, "local_edges": n_edges})
-        return all_nodes.join(F.broadcast(labels), "node", "left").select(
-            "node",
-            F.coalesce(F.col("component"), F.col("node")).alias("component"),
-        )
-
+    edges = base.filter(F.col("src") != F.col("dst"))
     prev_sig = None
     candidate = False  # last check matched the one before → confirm next round
     rounds = 0
@@ -262,6 +274,11 @@ def connected_components(
 
     # after convergence every edge is (node, root); roots map to themselves
     labels = edges.select(F.col("src").alias("node"), F.col("dst").alias("component"))
+    all_nodes = (
+        base.select(F.col("src").alias("node"))
+        .unionByName(base.select(F.col("dst").alias("node")))
+        .distinct()
+    )
     return (
         all_nodes.join(labels, "node", "left")
         .select(
@@ -288,14 +305,34 @@ def _rewrite_column(df: DataFrame, comp: DataFrame, col: str) -> DataFrame:
     )
 
 
+def _broadcast_hinted(df: DataFrame) -> bool:
+    """Whether a join against ``df`` picks up a broadcast hint: the
+    analyzed plan has a ``ResolvedHint`` with the broadcast strategy,
+    reached from the root through single-child nodes only — the same walk
+    Spark's EliminateResolvedHint makes when it moves hints onto joins."""
+    node = df._jdf.queryExecution().analyzed()
+    while True:
+        if node.getClass().getSimpleName() == "ResolvedHint":
+            strategy = node.hints().strategy()
+            if strategy.isDefined():
+                return strategy.get().displayName() == "broadcast"
+        children = node.children()
+        if children.size() != 1:
+            return False
+        node = children.head()
+
+
 def _canonicalize_subjects_joinwise(
     triples_df: DataFrame, components_df: DataFrame
 ) -> DataFrame:
-    """Rounds 1-5 implementation — one left join per rewritable column (3 on
-    the id slice, 2 on the literal slice = five shuffles of the full-width
-    triple table). Kept for the A/B in PLANS.md and as the semantics twin in
-    tests/test_components.py; ``canonicalize_subjects`` below moves the same
-    rewrite onto narrow key traffic."""
+    """One left join per rewritable column: 3 on the id slice, 2 on the
+    literal slice. This is ``canonicalize_subjects``' branch for
+    broadcast-hinted components, where all five joins plan as
+    BroadcastHashJoins and nothing is shuffled. Against a non-broadcast
+    components table the five joins shuffle the full-width triple table
+    five times (rounds 1-5), which is why the melt below is the branch for
+    everything else; this twin is also the melt's semantics reference in
+    tests/test_components.py and the A/B in PLANS.md."""
     comp = components_df
     ids = triples_df.filter(F.col("obj_kind") == "id")
     literals = triples_df.filter(F.col("obj_kind") != "id")
@@ -313,10 +350,17 @@ def canonicalize_subjects(triples_df: DataFrame, components_df: DataFrame) -> Da
     literal obj_values are never rewritten even if they textually match a
     node id.
 
-    Shuffle shape (VERDICT r5 #4): the join-per-column version shuffled the
-    FULL-WIDTH triple table five times (subj/graph/obj_value on the id
-    slice, subj/graph on the literal slice) — at 100× the triple table
-    through the exchange dominates kg_canonical_triples. This melt version
+    Broadcast components (what ``connected_components`` returns for small
+    graphs): the rewrite is ``_canonicalize_subjects_joinwise`` — five
+    per-column broadcast lookups, no exchange at all. The hint is read
+    from ``components_df``'s analyzed plan (``_broadcast_hinted``), so the
+    branch follows the input's own property, not a size estimate.
+
+    Any other components table takes the melt. Shuffle shape (VERDICT r5
+    #4): against a shuffled components table the join-per-column version
+    moves the FULL-WIDTH triple table five times (subj/graph/obj_value on
+    the id slice, subj/graph on the literal slice) — at 100× the triple
+    table through the exchange dominates kg_canonical_triples. The melt
     shuffles the wide table ONCE and moves everything else onto narrow key
     rows:
 
@@ -358,9 +402,12 @@ def canonicalize_subjects(triples_df: DataFrame, components_df: DataFrame) -> Da
     1.5M rows) and the margin grows with literal size. Joinwise is
     wall-faster at local[8] on both profiles because local shuffles move
     through page cache — bytes, not sandbox walls, are what a 1000-executor
-    network pays. Melt stays the default for the corpus shape this engine
-    targets; joinwise remains available and equivalence-tested, and AQE
-    broadcasts the components table inside both variants when it is small."""
+    network pays. Melt stays the non-broadcast branch for the corpus shape
+    this engine targets; joinwise is equivalence-tested against it, and AQE
+    broadcasts an unhinted components table inside both variants when its
+    runtime size turns out small."""
+    if _broadcast_hinted(components_df):
+        return _canonicalize_subjects_joinwise(triples_df, components_df)
     comp = components_df
     rid = F.unhex(F.md5(F.to_json(F.struct(*[F.col(c) for c in TRIPLE_COLS]))))
     t = triples_df.withColumn("__rid", rid)

@@ -17,6 +17,7 @@ from __future__ import annotations
 import re
 from typing import List, Tuple
 
+from ..util import local_frame
 from .synth import ENTITY_WORDS, _entity_iri
 
 
@@ -32,8 +33,11 @@ def default_dictionary() -> List[Tuple[str, str, float]]:
 
 
 def dictionary_df(spark):
-    return spark.createDataFrame(
-        default_dictionary(), "surface_form string, entity_id string, prior double"
+    forms, entity_ids, priors = (list(c) for c in zip(*default_dictionary()))
+    return local_frame(
+        spark,
+        {"surface_form": forms, "entity_id": entity_ids, "prior": priors},
+        "surface_form string, entity_id string, prior double",
     )
 
 
@@ -41,10 +45,10 @@ def detect_mentions(pages_df, surface_forms: List[str] = None):
     """pages(url, text) → (url, surface_form, tf).
 
     JVM column algebra (r8, guide §4.1), two tiers: a single-scan
-    alternation regex (one pass over the text, explode + partial-aggregated
-    count) when the form set provably makes it equal to independent
-    per-form counting, else one ``regexp_count`` per form fused into one
-    projection. Both replaced the earlier mapInPandas Python-regex pass
+    alternation regex (one pass over the text, per-row counts of the
+    distinct matches) when the form set provably makes it equal to
+    independent per-form counting, else one ``regexp_count`` per form
+    fused into one projection. Both replaced the earlier mapInPandas Python-regex pass
     (Arrow boundary + per-batch pandas loops for work codegen does
     natively). Both JVM patterns carry ``(?U)``, because Python ``re``'s
     ``\\b`` is Unicode-aware and Java's is not by default: its ``\\w`` is
@@ -62,11 +66,11 @@ def detect_mentions(pages_df, surface_forms: List[str] = None):
     src = pages_df.select("url", "text")
     text = F.coalesce(F.col("text"), F.lit(""))
     # Single-scan tier (r8): when every form is one \w+ token and none is a
-    # substring of another, one alternation regex scan + explode + partial-
-    # aggregated count is EXACTLY the per-form counts (\b..\b token matches
-    # cannot overlap or consume each other under those preconditions) — one
-    # pass over the corpus text instead of len(forms) passes, which is the
-    # shape that matters when the text is 100 TB. Forms violating the
+    # substring of another, one alternation regex scan + per-row counts is
+    # EXACTLY the per-form counts (\b..\b token matches cannot overlap or
+    # consume each other under those preconditions) — one pass over the
+    # corpus text instead of len(forms) passes, which is the shape that
+    # matters when the text is 100 TB. Forms violating the
     # precondition (multi-word, regex metacharacters, token-substring
     # overlap, where alternation CONSUMPTION could diverge from independent
     # counting) fall back to the per-form counting projection below;
@@ -76,16 +80,25 @@ def detect_mentions(pages_df, surface_forms: List[str] = None):
         a != b and a in b for a in forms for b in forms
     )
     if single_scan_safe:
+        # Counted per ROW, not grouped by url: a url that reaches this
+        # function twice (latest_pages keeps byte-identical re-crawls) must
+        # yield one (form, tf) set per row, exactly as the per-form tier
+        # does — a groupBy("url", ...) summed both copies (tf doubled).
+        # The matches are projected once into a column: referenced inside
+        # the lambda, the regex call itself would re-run per distinct form.
         pat = r"(?U)\b(" + "|".join(forms) + r")\b"
+        m = F.col("__m")
+        counts = F.transform(
+            F.array_distinct(m),
+            lambda f: F.struct(
+                f.alias("surface_form"),
+                F.size(F.filter(m, lambda x: x == f)).alias("tf"),
+            ),
+        )
         return (
-            src.select(
-                "url",
-                F.explode(F.regexp_extract_all(text, F.lit(pat), 1)).alias(
-                    "surface_form"
-                ),
-            )
-            .groupBy("url", "surface_form")
-            .agg(F.count(F.lit(1)).cast("int").alias("tf"))
+            src.select("url", F.regexp_extract_all(text, F.lit(pat), 1).alias("__m"))
+            .select("url", F.explode(counts).alias("m"))
+            .select("url", "m.surface_form", "m.tf")
         )
     structs = [
         F.struct(

@@ -27,7 +27,13 @@ from typing import Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .triples import TRIPLE_COLUMNS, extract_records, split_records
+from .triples import (
+    RECORDS_SCHEMA,
+    TRIPLE_COLUMNS,
+    TRIPLES_DDL,
+    extract_records,
+    split_records,
+)
 
 DEFAULT_BUCKETS = 32
 
@@ -189,7 +195,7 @@ def extract_and_materialize(
     if resume and existing:
         # read errors must FAIL here — swallowing them would re-append a
         # full copy of every record (duplicated triples + metrics)
-        done_urls = spark.read.parquet(records_path).select("url").distinct()
+        done_urls = _read_records(spark, records_path).select("url").distinct()
         todo = pages_df.join(done_urls, "url", "left_anti")
     elif not resume and existing:
         import shutil
@@ -213,12 +219,18 @@ def extract_and_materialize(
 
 
 def _read_records(spark: SparkSession, records_path: str) -> DataFrame:
-    """Read the append-only records table with mergeSchema: files written
-    before a column existed (e.g. run_ts, added r7) must still surface the
-    column (as NULL) rather than letting one old footer's schema win and
-    silently drop it — quarantined()'s recency scoping depends on seeing
-    run_ts whenever ANY file carries it (r7 review finding)."""
-    return spark.read.option("mergeSchema", "true").parquet(records_path)
+    """Read the append-only records table with its full known schema: files
+    written before a column existed (e.g. run_ts, added r7) must still
+    surface the column (as NULL) rather than letting one old footer's
+    schema win and silently drop it — quarantined()'s recency scoping
+    depends on seeing run_ts whenever ANY file carries it (an r7
+    finding). A parquet file that lacks a requested column reads it as
+    NULL, so the explicit schema (the extraction's records plus the run
+    lineage columns both writers add) keeps that guarantee without a
+    parallel footer-merge job on every read."""
+    return spark.read.schema(
+        RECORDS_SCHEMA + ", run_id string, run_ts double"
+    ).parquet(records_path)
 
 
 def _rebuild_outputs(spark: SparkSession, out_dir: str, buckets: int) -> None:
@@ -307,6 +319,9 @@ def replay_quarantined(
 
 
 def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "triples")).select(
-        *TRIPLE_COLUMNS
-    )
+    """The triples table written by ``write_triples``, read with its known
+    schema (``bucket`` is the directory partition column) instead of a
+    schema-inference job over the footers."""
+    return spark.read.schema(TRIPLES_DDL + ", bucket int").parquet(
+        os.path.join(out_dir, "triples")
+    ).select(*TRIPLE_COLUMNS)

@@ -207,6 +207,9 @@ def test_canonicalize_melt_equals_joinwise(spark):
         new = sorted((tuple(r) for r in canonicalize_subjects(t, comps).collect()), key=key)
         old = sorted((tuple(r) for r in _canonicalize_subjects_joinwise(t, comps).collect()), key=key)
         assert new == old
+        # broadcast-hinted components take the per-column broadcast branch
+        bc = canonicalize_subjects(t, F.broadcast(comps)).collect()
+        assert sorted((tuple(r) for r in bc), key=key) == new
 
 
 def test_canonicalize_melt_equals_joinwise_hub_graph(spark):
@@ -245,6 +248,8 @@ def test_canonicalize_melt_equals_joinwise_hub_graph(spark):
     new = sorted((tuple(r) for r in canonicalize_subjects(triples, comps).collect()), key=key)
     old = sorted((tuple(r) for r in _canonicalize_subjects_joinwise(triples, comps).collect()), key=key)
     assert new == old
+    bc = canonicalize_subjects(triples, F.broadcast(comps)).collect()
+    assert sorted((tuple(r) for r in bc), key=key) == new
     # the hub rewrite actually fired: every hot subj maps to the hub rep
     assert all(r[2] != hot[0] for r in new)
 
@@ -298,3 +303,93 @@ def test_small_graph_fast_path_equals_star_rounds(spark, monkeypatch):
         }
         assert star_stats["rounds"] > 0
         assert fast == star == union_find(edges)
+
+
+def _labels(df):
+    return {tuple(r) for r in df.collect()}
+
+
+def test_fast_path_boundary_counts_distinct_rows(spark, monkeypatch):
+    """The fast path gates on DISTINCT (src, dst) rows, self-loops
+    included: exactly SMALL_GRAPH_EDGES of them take the driver union-find,
+    one more takes the star rounds. Duplicate rows do not count, and
+    stats["local_edges"] is the distinct non-self-loop edge count either
+    side of the bound. Both sides label like the union-find golden."""
+    from jsonld_rs_spark.pipeline import components as C
+
+    rng = random.Random(4)
+    edges = [(f"n{rng.randrange(40)}", f"n{rng.randrange(40)}") for _ in range(30)]
+    edges += [("n0", "n0"), ("n1", "n1")] + edges[:5]  # self-loops + duplicates
+    distinct = set(edges)
+    extra = ("m0", "m1")
+    assert extra not in distinct
+    monkeypatch.setattr(C, "SMALL_GRAPH_EDGES", len(distinct))
+
+    at = spark.createDataFrame(edges, "src string, dst string")
+    s_at = {}
+    fast = C.connected_components(at, stats=s_at)
+    assert s_at["rounds"] == 0
+    assert s_at["local_edges"] == len({(a, b) for a, b in distinct if a != b})
+    assert C._broadcast_hinted(fast)
+    # driver-built labels are a LocalRelation: scanned and broadcast by the
+    # driver, with no PythonRDD behind them
+    hint = fast._jdf.queryExecution().analyzed()
+    assert hint.children().head().getClass().getSimpleName() == "LocalRelation"
+    assert _labels(fast) == set(union_find(edges).items())
+
+    over = spark.createDataFrame(edges + [extra], "src string, dst string")
+    s_over = {}
+    star = C.connected_components(over, stats=s_over)
+    assert s_over["rounds"] > 0 and "local_edges" not in s_over
+    assert not C._broadcast_hinted(star)
+    assert _labels(star) == set(union_find(edges + [extra]).items())
+
+
+def test_self_loop_only_node_and_null_endpoint(spark, monkeypatch):
+    """A node seen only in a self-loop labels itself; a row with a null
+    endpoint labels its other endpoint by itself and adds one
+    (null, null) row. The fast path and the star path agree row for row."""
+    from jsonld_rs_spark.pipeline import components as C
+
+    edges = [("b", "a"), ("c", "b"), ("s", "s"), ("q", None), (None, "r"),
+             (None, None), ("a", "a")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    want = {("a", "a"), ("b", "a"), ("c", "a"), ("s", "s"), ("q", "q"),
+            ("r", "r"), (None, None)}
+
+    s_fast = {}
+    fast = _labels(C.connected_components(df, stats=s_fast))
+    assert s_fast["rounds"] == 0 and s_fast["local_edges"] == 2
+
+    monkeypatch.setattr(C, "SMALL_GRAPH_EDGES", 0)
+    s_star = {}
+    star = _labels(C.connected_components(df, stats=s_star))
+    assert s_star["rounds"] > 0
+    assert fast == star == want
+
+
+def test_small_graph_canonicalize_plans_no_shuffle_join(spark):
+    """With the fast path's broadcast-hinted components, the canonical
+    rewrite runs as broadcast lookups: its executed plan has neither a
+    SortMergeJoin nor a hash-partitioning exchange."""
+    triples = spark.createDataFrame(
+        [
+            ("u1", "@default", "http://e/b", "http://p/sameAs", "id", "http://e/a", None, None),
+            ("u1", "http://e/b", "http://e/b", "http://p/name", "literal", "B", None, None),
+            ("u2", "@default", "http://e/c", "http://p/knows", "id", "http://e/b", None, None),
+        ],
+        "url string, graph string, subj string, pred string, obj_kind string, "
+        "obj_value string, obj_datatype string, obj_lang string",
+    ).repartition(3)
+    edges = triples.filter(F.col("pred") == "http://p/sameAs").select(
+        F.col("subj").alias("src"), F.col("obj_value").alias("dst")
+    )
+    out = canonicalize_subjects(triples, connected_components(edges))
+    rows = {(r["graph"], r["subj"], r["obj_value"]) for r in out.collect()}
+    assert rows == {("@default", "http://e/a", "http://e/a"),
+                    ("http://e/a", "http://e/a", "B"),
+                    ("@default", "http://e/c", "http://e/a")}
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+    assert "Exchange hashpartitioning" not in plan

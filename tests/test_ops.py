@@ -1701,7 +1701,10 @@ def test_detect_mentions_matches_python_regex(spark, docs):
     prove parity on real text; the crafted rows exercise boundary shapes
     (form at start/end, punctuation-adjacent, repeated, substring-embedded
     like 'database' which must NOT count, and adjacent non-ASCII letters
-    like 'dataé' or 'dataⅫ' which must not count either)."""
+    like 'dataé' or 'dataⅫ' which must not count either, and a url that
+    appears twice with the same text)."""
+    from collections import Counter
+
     from jsonld_rs_spark.pipeline.linking import (
         count_mentions_python,
         detect_mentions,
@@ -1717,36 +1720,57 @@ def test_detect_mentions_matches_python_regex(spark, docs):
         # sees no boundary, so the JVM pattern must not either ('Ⅻ' is a
         # letter number, which JDK 17's default \b treats as a boundary)
         ("u://c6", "dataé data édata table數據 _data dataⅫ data"),
+        # a byte-identical re-crawl: latest_pages keeps both rows, and each
+        # row must be counted on its own (tf=2 twice), not summed per url
+        ("u://c7", "data table data"),
+        ("u://c7", "data table data"),
     ]
     corpus = [
         ("u://d%d" % r["doc_id"], r["text"]) for r in docs.limit(50).collect()
     ]
     df = spark.createDataFrame(crafted + corpus, "url string, text string")
-    jvm = {
+    # multisets: one (url, form, tf) row per input row and form
+    jvm = Counter(
         (r["url"], r["surface_form"], r["tf"])
         for r in detect_mentions(df).collect()
-    }
-    py = {
+    )
+    py = Counter(
         (url, form, tf)
         for url, text in crafted + corpus
         for form, tf in count_mentions_python(text).items()
-    }
+    )
     assert jvm == py
 
     # fallback tier (r8): a form set with token-substring overlap and a
     # multi-word form must take the per-form counting path and still match
     # the Python twin exactly
     forms = ["data", "database", "big data"]
-    jvm2 = {
+    jvm2 = Counter(
         (r["url"], r["surface_form"], r["tf"])
         for r in detect_mentions(df, surface_forms=forms).collect()
-    }
-    py2 = {
+    )
+    py2 = Counter(
         (url, form, tf)
         for url, text in crafted + corpus
         for form, tf in count_mentions_python(text, forms).items()
-    }
+    )
     assert jvm2 == py2
+
+
+def test_dictionary_df_is_a_local_relation(spark):
+    """The link dictionary is built on the driver. As a LocalRelation its
+    scans (the broadcast in score_links) are plain JVM tasks; a list of
+    rows would parallelize through a PythonRDD and run Python tasks on
+    every scan. Rows and schema are the dictionary's."""
+    from jsonld_rs_spark.pipeline.linking import default_dictionary, dictionary_df
+
+    d = dictionary_df(spark)
+    plan = d._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert [tuple(r) for r in d.collect()] == default_dictionary()
+    assert d.schema.simpleString() == (
+        "struct<surface_form:string,entity_id:string,prior:double>"
+    )
 
 
 def test_encode_png_rejects_unsupported_channel_count():
